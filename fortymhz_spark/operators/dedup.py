@@ -107,29 +107,7 @@ def near_dup_components(
     )
     changed = -1
     for _ in range(max_iter):
-        propagated = (
-            edges.unionByName(selfloops)
-            .join(labels, F.col("dst") == labels["id"])
-            .groupBy("src")
-            .agg(
-                F.min("component").alias("component"),
-                # Round-start label rides along: convergence must
-                # compare against it, not the post-propagation
-                # intermediate — a propagation-only round (e.g. the
-                # first round of a star graph, where the center adopts
-                # a leaf's label but no jump shortcut exists yet) would
-                # otherwise count zero changes and exit with over-split
-                # components (caught by the 3-node-star regression
-                # test).  Exactly the self-loop row(s) of each group
-                # satisfy dst == src, and any input edge with
-                # dst == src joins that same round-start label, so the
-                # min is that label.
-                F.min(
-                    F.when(F.col("dst") == F.col("src"), F.col("component"))
-                ).alias("old_component"),
-            )
-            .select(F.col("src").alias("id"), "old_component", "component")
-        )
+        propagated = _propagate(edges, selfloops, labels)
         # Round-13 (guide §2.4): the jump join consumes `propagated`
         # on BOTH sides (probe side and `parent` build side).  Without
         # a lineage cut the physical plan inlines the propagate-join
@@ -180,6 +158,50 @@ def near_dup_components(
             "partial labels would over-split components"
         )
     return labels
+
+
+def _propagate(edges: DataFrame, selfloops: DataFrame, labels: DataFrame) -> DataFrame:
+    """One propagate step of :func:`near_dup_components`: each node's
+    new label is the min over its own and its neighbours' labels, and
+    ``old_component`` is its round-start label.
+
+    The round-start label rides along because convergence must compare
+    against it, not the post-propagation intermediate — a
+    propagation-only round (e.g. the first round of a star graph, where
+    the center adopts a leaf's label but no jump shortcut exists yet)
+    would otherwise count zero changes and exit with over-split
+    components (caught by the 3-node-star regression test).  Exactly the
+    self-loop row(s) of each group satisfy dst == src, and any input
+    edge with dst == src joins that same round-start label, so the min
+    is that label.  A node without its self-loop row would get a NULL
+    ``old_component``, drop out of the changed count and let the loop
+    exit early, so it raises instead.
+    """
+    return (
+        edges.unionByName(selfloops)
+        .join(labels, F.col("dst") == labels["id"])
+        .groupBy("src")
+        .agg(
+            F.min("component").alias("component"),
+            F.min(
+                F.when(F.col("dst") == F.col("src"), F.col("component"))
+            ).alias("old_component"),
+        )
+        .select(
+            F.col("src").alias("id"),
+            F.coalesce(
+                F.col("old_component"),
+                F.raise_error(
+                    F.concat(
+                        F.lit("near_dup_components: no self-loop row for node "),
+                        F.col("src").cast("string"),
+                    )
+                ),
+            ).alias("old_component"),
+            "component",
+        )
+    )
+
 
 # Round-13: hoisted to operators/partitioning.py::spread_scan so the
 # text/span operators can share it without a circular import (text.py

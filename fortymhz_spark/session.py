@@ -5,8 +5,23 @@ The reference engine hand-schedules one read task per Kafka partition
 does that for us.  What we own here is the configuration posture:
 AQE on (runtime coalescing + skew-join handling), Arrow on (fast
 pandas/UDF boundary), UTC session timezone (deterministic event-time
-semantics), and shuffle partitioning sized for the local harness while
-remaining overridable for a real cluster.
+semantics), and a split shuffle-partition posture:
+
+- Streaming state operators get one partition per core
+  (``spark.sql.shuffle.partitions`` = ``defaultParallelism``).  Spark
+  runs stateful streams with AQE off, so this is the count their state
+  operators use.  Every trigger of a keyed state operator runs one
+  state-store task per partition, data or not, so a count above the
+  cores only adds per-trigger coordination.  Spark fixes the count in a
+  query's checkpoint at first start; a restarted query keeps it, so
+  checkpoints written under an older posture keep theirs.
+- Batch plans, and stateless streams (which keep AQE), start from
+  ``BATCH_SHUFFLE_PARTITIONS`` (32) through
+  ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``, which
+  AQE then coalesces to the data.
+
+Callers that pass ``shuffle_partitions`` (tests, tools) get that one
+count for both.
 """
 
 from __future__ import annotations
@@ -14,6 +29,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Starting shuffle width of a batch plan under AQE, before coalescing.
+BATCH_SHUFFLE_PARTITIONS = 32
 
 # Runtime-settable confs applied even when the session is created by an
 # external harness (the driver owns the session in verify runs).
@@ -60,7 +78,9 @@ def get_session(
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when unset so the
     same entry points serve the test harness and a real cluster (where
-    spark-submit supplies the master).
+    spark-submit supplies the master).  ``shuffle_partitions`` pins both
+    the stream-state and batch partition counts; unset, stream state gets
+    ``defaultParallelism`` and batch plans ``BATCH_SHUFFLE_PARTITIONS``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name)
@@ -68,15 +88,24 @@ def get_session(
         builder = builder.master(master)
     elif "SPARK_MASTER" not in os.environ and not os.environ.get("SPARK_CONNECT_MODE"):
         builder = builder.master(f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
     builder = (
-        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config(
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+            str(shuffle_partitions or BATCH_SHUFFLE_PARTITIONS),
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if shuffle_partitions is not None:
+        builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)
-    return tune_session(builder.getOrCreate())
+    spark = tune_session(builder.getOrCreate())
+    if shuffle_partitions is None:
+        # The core count is known only once the context is up.
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+        )
+    return spark

@@ -608,6 +608,17 @@ def snapshot_diff(
     )
 
 
+def _batch_partitions(spark: SparkSession) -> int:
+    """The shuffle width a batch plan starts from: AQE's initial
+    partition number when set (session.py sizes
+    ``spark.sql.shuffle.partitions`` for stream state), else the shuffle
+    partition count."""
+    initial = spark.conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None
+    )
+    return int(initial or spark.conf.get("spark.sql.shuffle.partitions"))
+
+
 def compact_snapshot(
     spark: SparkSession,
     table_dir: str,
@@ -618,8 +629,8 @@ def compact_snapshot(
     note: str = "",
 ) -> int:
     """OPTIMIZE: republish the current version's CONTENT in
-    ``target_files`` files (default: the session's shuffle
-    parallelism, cap 1 per ~nonempty table) as v=N+1 — the small-file
+    ``target_files`` files (default: a quarter of the session's batch
+    shuffle parallelism, at least 1) as v=N+1 — the small-file
     compaction every streaming-ingested table eventually needs.  The
     data is byte-identical row-wise (pinned by test); only the file
     layout changes, and time travel to the fragmented version keeps
@@ -646,9 +657,7 @@ def compact_snapshot(
     df = read_snapshot(spark, table_dir, version=current)
     meta = manifest["versions"][str(current)]
     if target_files is None:
-        target_files = max(
-            1, int(spark.conf.get("spark.sql.shuffle.partitions", "32")) // 4
-        )
+        target_files = max(1, _batch_partitions(spark) // 4)
     if zorder_by:
         from fortymhz_spark.operators.partitioning import zorder_key
 

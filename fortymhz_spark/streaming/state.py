@@ -59,6 +59,16 @@ def _physical_pdf(pdf):
     return pdf[(pdf["HEAD"] == 2) & (pdf["TDC_CHANNEL"] <= 128)]
 
 
+# The columns the orbit state functions read.  The Python state operators
+# convert every input column to pandas once per orbit, and Catalyst cannot
+# prune through them, so the stream is cut to these before the shuffle.
+_STATE_INPUT = ("ORBIT_CNT", "HEAD", "TDC_CHANNEL", "BX_COUNTER")
+
+
+def _state_input(hits_stream: DataFrame) -> DataFrame:
+    return physical_hits(hits_stream).select(*_STATE_INPUT)
+
+
 def _make_assemble(inactivity_ms: int):
     """Build the stateful assembly function with a given inactivity
     flush timeout (closure — the function is pickled to workers)."""
@@ -135,9 +145,9 @@ def assemble_orbits(hits_stream: DataFrame, inactivity_ms: int = 2_000) -> DataF
     shuffle to physical hits only, and it keeps stream/batch outputs
     convergent (no state is ever created for an all-noise orbit).
     """
-    phys = physical_hits(hits_stream)
     return (
-        phys.groupBy("ORBIT_CNT")
+        _state_input(hits_stream)
+        .groupBy("ORBIT_CNT")
         .applyInPandasWithState(
             _make_assemble(inactivity_ms),
             outputStructType=ORBIT_SUMMARY,
@@ -257,8 +267,7 @@ def profile_orbits(hits_stream: DataFrame, inactivity_ms: int = 2_000) -> DataFr
     :func:`assemble_orbits`, plus per-channel hit counts from MapState.
     The session must run the RocksDB state store provider
     (``spark.sql.streaming.stateStore.providerClass``)."""
-    phys = physical_hits(hits_stream)
-    return phys.groupBy("ORBIT_CNT").transformWithStateInPandas(
+    return _state_input(hits_stream).groupBy("ORBIT_CNT").transformWithStateInPandas(
         statefulProcessor=OrbitProfileProcessor(inactivity_ms),
         outputStructType=ORBIT_PROFILE,
         outputMode="append",

@@ -606,6 +606,29 @@ def test_near_dup_components_star_graph_regression(spark):
     assert labels2 == {i: 0 for i in (0, 1, 2, 3, 4, 5)}
 
 
+def test_near_dup_components_missing_self_loop_raises(spark):
+    """The round-start label is read off each node's self-loop row.  A
+    node fed without one would get a NULL old label, drop out of the
+    changed count and let the loop exit with over-split components, so
+    the propagate step must raise instead."""
+    from pyspark.errors import PySparkException
+    from py4j.protocol import Py4JJavaError
+
+    from fortymhz_spark.operators.dedup import _propagate
+
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 0), (1, 2), (2, 1)], "src long, dst long"
+    )
+    labels = spark.createDataFrame([(0, 0), (1, 0), (2, 1)], "id long, component long")
+    all_loops = labels.select(F.col("id").alias("src"), F.col("id").alias("dst"))
+    got = {r["id"]: r["old_component"] for r in _propagate(edges, all_loops, labels).collect()}
+    assert got == {0: 0, 1: 0, 2: 1}
+
+    without_2 = all_loops.filter(F.col("src") != 2)
+    with pytest.raises((PySparkException, Py4JJavaError), match="no self-loop row for node 2"):
+        _propagate(edges, without_2, labels).collect()
+
+
 def test_near_dup_components_random_graphs_vs_union_find(spark):
     """Randomized differential: min-label components on random graphs
     must equal a driver-side union-find.  Catches convergence-check

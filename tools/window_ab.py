@@ -15,7 +15,8 @@ Round-10 recorded result: r9 commit 19.7 s vs HEAD 20.8 s (1.06×,
 inside noise) in a window measuring ~1.55-1.7× against the r9 driver
 reference of 12.4 s for the same probes — see BASELINE.md.
 
-Run:  python tools/window_ab.py [ref_commit]   (default: HEAD~20)
+Run:  python tools/window_ab.py [ref_commit]   (default: HEAD~20;
+      master local[$SPARK_GRAFT_CPUS], default local[32])
 """
 
 from __future__ import annotations
@@ -39,6 +40,9 @@ PROBES = [
 ]
 
 SF_DIR = "/root/testdata/sf0.1"
+# Each tree builds its session through its own session.get_session, so
+# a change to the session posture is part of what the A/B measures.
+MASTER = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
 
 
 def run_tree(tree: str) -> dict[str, float]:
@@ -48,10 +52,8 @@ def run_tree(tree: str) -> dict[str, float]:
     body = f"""
 import sys, time, statistics, json
 sys.path.insert(0, {tree!r})
-from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master('local[32]')
-         .config('spark.sql.shuffle.partitions','32')
-         .appName('window-ab').getOrCreate())
+from fortymhz_spark.session import get_session
+spark = get_session('window-ab', master={MASTER!r})
 spark.sparkContext.setLogLevel('ERROR')
 from fortymhz_spark.queries import all_queries
 qs = all_queries()
