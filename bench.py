@@ -160,11 +160,11 @@ HEADLINE = [
     "q_docs_bpe_merges",
     # round-5 additions: the trained-classifier slots (bucketed-array
     # and broadcast-vocab), production-size BPE encode, and the
-    # snapshot MERGE protocol.  NB: lakehouse._MERGE_CACHE builds the
-    # merged table once per process, so only the COLD rep pays the v1
-    # write + merge rewrite (visible in BENCH_DETAILS.json "cold");
-    # the median reps grade the manifest read + aggregate over the
-    # published artifact.
+    # snapshot MERGE protocol.  NB: lakehouse._merge_table is
+    # build_once, so the merged table is built once per process and
+    # only the COLD rep pays the v1 write + merge rewrite (visible in
+    # BENCH_DETAILS.json "cold"); the median reps grade the manifest
+    # read + aggregate over the published artifact.
     "q_docs_classifier_trained",
     "q_docs_vocab_classifier",
     "q_docs_bpe_encode_stats",

@@ -43,16 +43,6 @@ def sample_score(key: Column | str) -> Column:
     return F.pmod(k.cast("long") * F.lit(KNUTH), F.lit(SCORE_MOD))
 
 
-def hash_sample(df: DataFrame, rate: float, key_col: str) -> DataFrame:
-    """Keep ~``rate`` of rows, chosen deterministically by key.
-
-    Reproducible across partitionings/engines (unlike ``df.sample``);
-    the filter is a pure column predicate, so it pushes into the scan
-    stage and composes with column pruning.
-    """
-    return df.filter(sample_score(key_col) < int(rate * SCORE_MOD))
-
-
 def stratified_sample(
     df: DataFrame, strata_col: str, fractions: dict[str, float], key_col: str
 ) -> DataFrame:
@@ -67,24 +57,6 @@ def stratified_sample(
         thresh = F.when(cond, lit) if thresh is None else thresh.when(cond, lit)
     thresh = thresh.otherwise(F.lit(0)) if thresh is not None else F.lit(0)
     return df.filter(sample_score(key_col) < thresh)
-
-
-def take_per_group(
-    df: DataFrame, group_col: str, n: int, key_col: str
-) -> DataFrame:
-    """Deterministic fixed-size per-group sample (reservoir-style
-    semantics without the randomness): the ``n`` rows with the lowest
-    hash score per group.  One shuffle on the group key; the window
-    keeps n rows per partition-group, so skewed groups cost sort time
-    but bounded output."""
-    w = Window.partitionBy(group_col).orderBy(
-        sample_score(key_col).asc(), F.col(key_col).asc()
-    )
-    return (
-        df.withColumn("__rn__", F.row_number().over(w))
-        .filter(F.col("__rn__") <= n)
-        .drop("__rn__")
-    )
 
 
 def epoch_shuffle_key(key: Column | str, epoch: int) -> Column:

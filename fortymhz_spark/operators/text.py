@@ -93,10 +93,6 @@ def token_count(text: Column | str) -> Column:
     return F.size(tokens(text)).cast("long")
 
 
-def distinct_token_count(text: Column | str) -> Column:
-    return F.size(F.array_distinct(tokens(text))).cast("long")
-
-
 def word_set(text: Column | str) -> Column:
     """Distinct lowercase tokens — the shingle set for Jaccard ops."""
     t = _sql_of(text)

@@ -14,8 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fortymhz_spark.functions.dt import event_time_seconds, is_physical_hit
-from fortymhz_spark.queries.registry import Registry
+from fortymhz_spark.functions.dt import is_physical_hit
+from fortymhz_spark.queries.registry import Registry, scratch_dir
 from fortymhz_spark.sources.batch import DEFAULT_HITS_CSV, read_hits_csv
 
 reg = Registry()
@@ -158,7 +158,6 @@ if _HAVE_FIXTURE:
         it.  Replaces the reference's manual read_batch()+pandas loop
         (``/root/reference/code/test_reader.ipynb`` cell-2)."""
         import shutil
-        import tempfile
 
         from fortymhz_spark.streaming import (
             hits_file_stream,
@@ -166,16 +165,11 @@ if _HAVE_FIXTURE:
             streaming_channel_occupancy,
         )
 
-        d = tempfile.mkdtemp(prefix="fmhz_hits_")
+        d = scratch_dir("hits_")
         shutil.copy(_CSV, os.path.join(d, "hits.csv"))
         occ = streaming_channel_occupancy(hits_file_stream(spark, d))
         got = run_to_memory(occ, spark, output_mode="complete")
         return got.orderBy(F.desc("n_hits"), "fpga", "channel")
-
-
-def event_time_df(spark: SparkSession) -> DataFrame:
-    """Hits fixture with the derived event-time column (tests/streaming)."""
-    return read_hits_csv(spark).withColumn("event_time_s", event_time_seconds())
 
 
 @reg.query(

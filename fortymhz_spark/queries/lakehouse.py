@@ -4,7 +4,7 @@
 MERGE semantics are plain relational algebra (anti-join + union), so
 the oracle can replay the whole upsert/delete outcome in SQL — the
 query performs the real side-effecting protocol (write v1 → merge →
-read back v2 through the manifest) into a per-call temp directory and
+read back v2 through the manifest) into a scratch directory and
 returns the post-merge table's aggregate state.  A broken anti-join,
 a delete leak, a lost carry-over row, or a manifest that resolves the
 wrong version all change the graded cells.
@@ -12,14 +12,10 @@ wrong version all change the graded cells.
 
 from __future__ import annotations
 
-import atexit
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from fortymhz_spark.queries.registry import Registry
+from fortymhz_spark.queries.registry import Registry, build_once, scratch_dir
 from fortymhz_spark.sources.batch import load_table
 from fortymhz_spark.sources.snapshots import (
     merge_snapshot,
@@ -31,29 +27,16 @@ reg = Registry()
 QUERIES = reg.queries
 ORACLE = reg.oracle
 
-# One merged snapshot table per (process, sf_dir): (table_dir, n_base).
-# Rebuilt lazily, removed at interpreter exit.
-_MERGE_CACHE: dict[str, tuple[str, int]] = {}
 
-
-@atexit.register
-def _cleanup_merge_cache() -> None:
-    for path, _ in _MERGE_CACHE.values():
-        shutil.rmtree(path, ignore_errors=True)
-    _MERGE_CACHE.clear()
-
-
+@build_once
 def _merge_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    """Build (once per sf_dir) the v1 → MERGE → v2 snapshot table the
-    merge query grades, returning (table_dir, v1 row count)."""
-    cached = _MERGE_CACHE.get(sf_dir)
-    if cached is not None:
-        return cached
+    """Build the v1 → MERGE → v2 snapshot table the merge query grades,
+    returning (table_dir, v1 row count)."""
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus"
     )
     k = F.col("o_orderkey")
-    table_dir = tempfile.mkdtemp(prefix="fmhz_snapmerge_")
+    table_dir = scratch_dir("snapmerge_")
 
     base = orders.filter(k % 3 != 0)
     write_snapshot(base, table_dir, note="base: keys % 3 != 0")
@@ -83,7 +66,6 @@ def _merge_table(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
         delete_col="is_delete",
         note="replace %5, insert new %5, delete %7 survivors",
     )
-    _MERGE_CACHE[sf_dir] = (table_dir, n_base)
     return table_dir, n_base
 
 

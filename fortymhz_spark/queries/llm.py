@@ -16,7 +16,7 @@ from fortymhz_spark.operators import dedup as dd
 from fortymhz_spark.operators import similarity as sim
 from fortymhz_spark.operators import text as tx
 from fortymhz_spark.operators.partitioning import spread_scan
-from fortymhz_spark.queries.registry import Registry
+from fortymhz_spark.queries.registry import Registry, build_once, scratch_dir
 from fortymhz_spark.sources.batch import load_table
 
 reg = Registry()
@@ -351,22 +351,14 @@ def q_docs_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # reproduce: ALL pairs at jaccard >= 0.7 over old ∪ new that involve
 # a batch doc — so a missed new↔old pair (a broken index read, a
 # band-parameter drift between build and serve) fails the hash, not
-# just a recall statistic.  Index build is cached per (process,
-# sf_dir), mirroring the ann-index and merge-table patterns.
+# just a recall statistic.  The index is built once per sf_dir.
 # ---------------------------------------------------------------------------
-_MINHASH_INDEX_CACHE: dict[str, str] = {}
-
-
+@build_once
 def _minhash_index_table(spark: SparkSession, sf_dir: str) -> str:
-    if sf_dir in _MINHASH_INDEX_CACHE:
-        return _MINHASH_INDEX_CACHE[sf_dir]
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents")
     old = docs.filter(F.col("doc_id") % 20 != 0)
-    table_dir = tempfile.mkdtemp(prefix="fmhz_mhidx_")
+    table_dir = scratch_dir("mhidx_")
     dd.build_minhash_index(old, table_dir, num_hashes=32, bands=16)
-    _MINHASH_INDEX_CACHE[sf_dir] = table_dir
     return table_dir
 
 

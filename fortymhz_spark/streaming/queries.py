@@ -12,7 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fortymhz_spark.functions.dt import event_time_seconds, is_physical_hit
+from fortymhz_spark.functions.dt import is_physical_hit
 
 
 def streaming_channel_occupancy(hits: DataFrame) -> DataFrame:
@@ -30,48 +30,6 @@ def streaming_channel_occupancy(hits: DataFrame) -> DataFrame:
             F.col("TDC_CHANNEL").cast("int").alias("channel"),
         )
         .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-
-
-def with_event_time(hits: DataFrame, epoch: str = "2020-01-01") -> DataFrame:
-    """Attach a TIMESTAMP event-time column derived from the LHC
-    counters (SURVEY.md §1.2) for watermarking/windowing.
-
-    The counter epoch is arbitrary (the detector does not publish wall
-    clock); windows are relative, which is all watermark semantics need.
-    """
-    return hits.withColumn(
-        "event_time",
-        F.timestamp_micros(
-            (event_time_seconds() * F.lit(1e6)).cast("long")
-        ) + (F.to_timestamp(F.lit(epoch)) - F.to_timestamp(F.lit("1970-01-01"))),
-    )
-
-
-def streaming_orbit_rate(
-    hits: DataFrame, *, window_duration: str = "1 second", watermark: str = "10 seconds"
-) -> DataFrame:
-    """Hit rate per tumbling event-time window with late-data bound.
-
-    Watermark closes windows once event time has advanced past
-    window-end + delay; state is dropped eagerly, so the query runs
-    forever at fixed memory — the streaming guarantee the reference
-    has no notion of (no event time anywhere, SURVEY.md §2.7 ST3).
-    """
-    return (
-        with_event_time(hits)
-        .withWatermark("event_time", watermark)
-        .groupBy(F.window("event_time", window_duration).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_hits"),
-            F.approx_count_distinct("ORBIT_CNT").alias("approx_orbits"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "n_hits",
-            "approx_orbits",
-        )
     )
 
 
