@@ -393,6 +393,15 @@ def _audit_order(round_idx: int) -> list[str]:
     return order
 
 
+def headline_names(registry: dict) -> list[str]:
+    """HEADLINE in order, checked against ``registry``: an unregistered
+    name raises KeyError instead of silently shortening the headline."""
+    missing = [n for n in HEADLINE if n not in registry]
+    if missing:
+        raise KeyError(f"headline queries not registered: {missing}")
+    return list(HEADLINE)
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -410,7 +419,7 @@ def main() -> None:
     spark = get_session("fortymhz-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     registry = all_queries()
-    names = [n for n in HEADLINE if n in registry]
+    names = headline_names(registry)
 
     # Warm the JVM + parquet footers with one cheap action so per-query
     # timings measure the engine, not classloading.

@@ -20,7 +20,12 @@ from pyspark.sql import functions as F
 from fortymhz_spark.schemas import DT_HIT, TABLE_NAMES
 from fortymhz_spark.session import tune_session
 
-DEFAULT_HITS_CSV = "/root/reference/code/test/test_data.csv"
+# The package's own DT-hit fixture (FIXTURES.md §A): 65 rows over 15
+# orbits built from ``dt_datasource.hits_for_orbit`` plus a few planted
+# repeated-channel and non-physical hits.  The reference's
+# ``code/test/test_data.csv`` has the same header and can be passed to
+# ``read_hits_csv`` as ``path``.
+DEFAULT_HITS_CSV = os.path.join(os.path.dirname(__file__), "dt_hits.csv")
 
 # Per-session memo of fixture *plan handles* (round-13 optimization,
 # guide §1/§7.3: schema inference is a driver-side footer-read job, ~120-220 ms

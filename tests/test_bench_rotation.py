@@ -11,6 +11,8 @@ being structurally skipped forever.  Pure-function tests: no Spark.
 
 from __future__ import annotations
 
+import pytest
+
 import bench
 
 
@@ -94,3 +96,11 @@ def test_headline_and_audit_are_registered_and_disjoint():
     ]
     assert not missing, missing
     assert not set(bench.HEADLINE) & set(bench.AUDIT)
+
+
+def test_unregistered_headline_query_raises():
+    registry = dict.fromkeys(bench.HEADLINE)
+    assert bench.headline_names(registry) == bench.HEADLINE
+    del registry[bench.HEADLINE[0]]
+    with pytest.raises(KeyError, match=bench.HEADLINE[0]):
+        bench.headline_names(registry)

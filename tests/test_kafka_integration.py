@@ -35,10 +35,10 @@ def _connector_available(spark) -> bool:
 
 
 def test_kafka_round_trip_exactly_once(spark, tmp_path):
-    """Produce the 61-row hits fixture to a fresh topic as JSON, consume
-    it back through the streaming reader with a checkpoint, and assert
-    the decoded rows equal the source exactly (no loss, no dupes) —
-    including across a stop/restart mid-topic."""
+    """Produce the package's DT-hit fixture to a fresh topic as JSON,
+    consume it back through the streaming reader with a checkpoint, and
+    assert the decoded rows equal the source exactly (no loss, no
+    dupes) — including across a stop/restart mid-topic."""
     if not _connector_available(spark):
         pytest.skip("spark-sql-kafka connector not on the classpath")
 

@@ -17,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fortymhz_spark.schemas import DT_HIT, EVENTS
-from fortymhz_spark.sources.batch import load_table, read_hits_csv
+from fortymhz_spark.sources.batch import DEFAULT_HITS_CSV, load_table, read_hits_csv
 from fortymhz_spark.streaming import (
     file_stream,
     hits_file_stream,
@@ -30,17 +30,15 @@ from fortymhz_spark.streaming import (
 from fortymhz_spark.streaming.state import assemble_orbits, assemble_orbits_batch
 
 SF_DIR = "/root/testdata/sf0.001"
-HITS_CSV = "/root/reference/code/test/test_data.csv"
-
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(HITS_CSV), reason="reference fixture unavailable"
-)
+# The stream replays the same file ``read_hits_csv`` reads by default,
+# so every stream/batch-twin comparison sees identical rows.
+HITS_CSV = DEFAULT_HITS_CSV
 
 
 @pytest.fixture(scope="module")
 def hits_csv_dir(tmp_path_factory):
-    """The reference fixture staged into a directory (the file source
-    streams directories, not single files)."""
+    """The package's DT-hit fixture staged into a directory (the file
+    source streams directories, not single files)."""
     d = tmp_path_factory.mktemp("hits_csv")
     shutil.copy(HITS_CSV, d / "test_data.csv")
     return str(d)
@@ -307,8 +305,9 @@ def test_assemble_orbits_rocksdb_state_store(spark, tmp_path):
 
 def test_profile_orbits_batch_twin(spark):
     """The batch twin of orbit profiling, verified against a hand
-    computation over the 61-row fixture.  This is the semantics contract
-    the streaming transformWithStateInPandas form must converge to."""
+    computation over the package's DT-hit fixture.  This is the
+    semantics contract the streaming transformWithStateInPandas form
+    must converge to."""
     from fortymhz_spark.streaming.state import profile_orbits_batch
 
     hits = read_hits_csv(spark)

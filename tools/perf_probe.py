@@ -56,7 +56,7 @@ def main() -> None:
     else:
         import bench
 
-        names = [n for n in bench.HEADLINE if n in registry]
+        names = bench.headline_names(registry)
 
     # Warm the JVM/classloader once so query 1 is not charged for it.
     registry[names[0]](spark, args.sf_dir).limit(1).collect()
