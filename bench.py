@@ -1,60 +1,29 @@
 #!/usr/bin/env python
-"""Benchmark harness: times the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: times the HEADLINE queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints one
 JSON line:  {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec}, "sf": ...}.
 
-Each query is fully executed (collected to the driver) so the timing
-covers scan → shuffle → result, not just plan construction.
+Each query is collected to the driver, so a timing covers scan →
+shuffle → result, not just plan construction.
 
-Noise posture (round-2 judge: round-over-round comparisons were
-dominated by ±30-50 % co-tenant noise): every query now runs
-$SPARK_GRAFT_BENCH_REPS times (default 3) in INTERLEAVED rounds —
-q1..qN, q1..qN, … — so a transient host stall inflates one round of
-many queries instead of every rep of one query.  The headline
-"queries" map carries per-query MEDIANS; "value" is the sum of medians
-— the steady-state engine cost a round-over-round comparison should
-use.  A short window (budget stops the sweep before 3 rounds) falls
-back to per-query MIN (the warm rep); the top-level "stat" field
-("median"|"min") records which estimator produced the numbers
-(round-10 advisor item).
-
-Lifecycle audits (round-11; round-12 rotation): the AUDIT list's
-queries — the ANN codes family + PCA moments + the deliberately-
-uncached refit/residual/tuned audits — run ONCE each after the
-timed sweep, wall-guarded by SPARK_GRAFT_BENCH_WALL_S, with their
-walls recorded in BENCH_DETAILS.json["audit"] and summarized in the
-compact line's "audit" field but NEVER summed into "value": each is
-a correctness audit dominated by its graded twin/exact branches, and
-timing them inside the interleaved reps ate the driver's budget down
-to reps=2 in round 10.  Round-12 changes (the r11 verdict's top
-item — the default wall skipped ALL audit rows): the 3 CHEAP
-rotation rows of _audit_order(round) run as a ≤ ~25 s PRIORITY SLICE
-between reps 2 and 3 (the verdict's option B — a reserved slice
-ahead of the third rep, positioned where no window can exhaust the
-wall first; its wall is credited to the rep budget), the rest run
-after the recall report cheapest-first-after-the-heavy-rotation-row,
-and every admission requires the row's EXPECTED cost
-(AUDIT_EXPECTED_S) to fit under the wall — so a default-budget
-driver run times ≥3 audit rows on ANY window and never overshoots
-the wall by a whole audit.  The third rep itself is wall-aware: on a
-window too slow to hold rep 3 + the recall reserve it yields (stat
-degrades to the labeled min-of-2) rather than zeroing the audit and
-recall evidence — the opposite trade from round 11.  Skipped rows
-land in audit_skipped (their correctness is the GATE's job); the
-full audit timing record comes from raised-wall invocations
-(BASELINE.md).
-
-Output discipline (round-3 judge: BENCH_r03.json failed to parse
-because the enriched single line with cold/spread for 55 queries
-overflowed the driver's 2000-char stdout capture): the final stdout
-line is now a COMPACT json object (minimal separators, 3-decimal
-medians, no cold/spread) printed last and alone; cold-run times,
-spreads, and full-precision medians go to BENCH_DETAILS.json next to
-this script.  "n_queries_in_value" counts the queries summed into
-"value" and "excluded" names any query dropped for erroring, so a
-round-over-round total comparison can detect a changed denominator
-(round-3 advisor item).
+- Reps: $SPARK_GRAFT_BENCH_REPS (default 3) INTERLEAVED rounds
+  (q1..qN, q1..qN, …), so a host stall inflates one round of many
+  queries instead of every rep of one query.
+- Stat: with 3+ rounds "queries" holds per-query medians; with fewer,
+  per-query minima (the warm rep).  "stat" says which; "value" is the
+  sum.  An erroring query leaves the sum and is named in "excluded".
+- Budget: a round after the first starts only when the elapsed time
+  plus the previous round's wall fits in $SPARK_GRAFT_BENCH_BUDGET_S.
+- Recall: ann_recall_report's recall@k at bench scale, never summed.
+- Audits: the AUDIT rows run once each, cheapest first, after the
+  recall report; a row starts only while the elapsed time is under
+  $SPARK_GRAFT_BENCH_WALL_S, and unstarted rows are reported skipped.
+  Their walls go to BENCH_DETAILS.json and the "audit" summary, never
+  into "value".
+- Output: the stdout line is compact JSON capped at 1900 chars (the
+  tail a caller captures); cold runs, spreads and samples go to
+  BENCH_DETAILS.json next to this script.
 """
 
 from __future__ import annotations
@@ -94,12 +63,11 @@ HEADLINE = [
     "q13_order_count_distribution",
     "q18_large_volume_orders",
     "q21_suppliers_kept_waiting",
-    # north-star gate queries: perf regressions here must be visible
-    # per-round, not just correctness.  NOTE round 3 semantics change:
-    # q_emb_ann_lsh / q_emb_ann_ivf / q_docs_simhash_near_dups /
-    # q_media_features / q_sketch_heavy_hitters now embed their oracle
-    # ground-truth branch (recall/containment/checksum checks), so their
-    # cost includes the verification work — compare against r3+, not r2.
+    # gate queries.  q_emb_ann_lsh / q_emb_ann_ivf /
+    # q_docs_simhash_near_dups / q_media_features /
+    # q_sketch_heavy_hitters embed their oracle ground-truth branch
+    # (recall/containment/checksum checks), so their time includes
+    # the verification work.
     "q_emb_ann_lsh",
     "q_emb_ann_ivf",
     "q_docs_simhash_near_dups",
@@ -112,7 +80,7 @@ HEADLINE = [
     "q_docs_dedup_groups",
     "q_docs_decontaminate",
     "q_events_dedup_ingest",
-    # round-2 training-pipeline additions
+    # training-pipeline queries
     "q_chunk_token_windows",
     "q_text_repetition_stats",
     "q_pack_sequences",
@@ -126,7 +94,6 @@ HEADLINE = [
     "q_shuffle_epochs",
     "q_pack_export",
     "q_mixture_upsample",
-    # round-3 additions (scale-path twins + right outer).
     # q_emb_near_dup_lsh_subset is gate-only, NOT a bench headline: its
     # exact ground-truth branch is all-pairs BY DESIGN (the verification
     # harness for the LSH path), which at sf0.1's 2k vectors costs
@@ -134,11 +101,10 @@ HEADLINE = [
     # family are q_emb_ann_lsh / q_emb_ann_ivf.
     "q_docs_jaccard_blocked",
     "q_right_outer_order_counts",
-    # round-4 curation additions.  q_emb_semantic_dedup and
-    # q_emb_semantic_keep_list are gate-only for the same reason as
-    # q_emb_near_dup_lsh_subset: their graded forms embed the exact
-    # all-pairs ground-truth branch, which is quadratic BY DESIGN at
-    # verification scale.
+    # q_emb_semantic_dedup and q_emb_semantic_keep_list are gate-only
+    # for the same reason as q_emb_near_dup_lsh_subset: their graded
+    # forms embed the exact all-pairs ground-truth branch, which is
+    # quadratic BY DESIGN at verification scale.
     "q_docs_tfidf_top_terms",
     "q_docs_bigram_familiarity",
     "q_mixture_temperature",
@@ -148,23 +114,14 @@ HEADLINE = [
     "q_histogram_quantity",
     "q_docs_decontaminate_bloom",
     "q_docs_quality_classifier",
-    # NB round 12: q_emb_ann_pq / q_emb_ann_ivfpq moved to AUDIT —
-    # like the rest of that family their wall is dominated by the
-    # in-plan exact ground-truth branch (the grade), not the serving
-    # path, and together they held ~38 s of the driver's wall across
-    # 3 reps; the timed ANN serving representatives remain
-    # q_emb_ann_lsh / q_emb_ann_ivf, and PQ/IVFPQ QUALITY is still
-    # measured every run by the bench-scale ann_recall report.  The
-    # freed wall is what lets a default-budget run time audit rows
-    # again (the round-11 verdict's top item).
     "q_docs_bpe_merges",
-    # round-5 additions: the trained-classifier slots (bucketed-array
-    # and broadcast-vocab), production-size BPE encode, and the
-    # snapshot MERGE protocol.  NB: lakehouse._merge_table is
-    # build_once, so the merged table is built once per process and
-    # only the COLD rep pays the v1 write + merge rewrite (visible in
-    # BENCH_DETAILS.json "cold"); the median reps grade the manifest
-    # read + aggregate over the published artifact.
+    # the trained-classifier slots (bucketed-array and broadcast-vocab),
+    # production-size BPE encode, and the snapshot MERGE protocol.  NB:
+    # lakehouse._merge_table is build_once, so the merged table is
+    # built once per process and only the COLD rep pays the v1 write +
+    # merge rewrite (visible in BENCH_DETAILS.json "cold"); the median
+    # reps grade the manifest read + aggregate over the published
+    # artifact.
     "q_docs_classifier_trained",
     "q_docs_vocab_classifier",
     "q_docs_bpe_encode_stats",
@@ -179,20 +136,13 @@ HEADLINE = [
     "q_docs_hybrid_search",
     # unigram tokenizer: corpus pass + driver EM + arrow Viterbi encode
     "q_docs_unigram_encode_stats",
-    # round-6 addition: the soft-EM (forward-backward) unigram
-    # variant with its extra driver-side hard-EM train for the
-    # divergence grade.  NB round 11: q_emb_ann_ivfpq_auto (the
-    # all-auto deployment configuration) moved to AUDIT — it re-fits
-    # per call BY DESIGN (two bounded training collects + the exact
-    # ground-truth branch), which made it the headline's most
-    # volatile row in a long-lived session ([10.1, 27.9, 22.5]
-    # sampled mid-sweep vs 6.0 s warm in a fresh session); the
-    # serving-path timed representatives remain lsh/ivf/pq/ivfpq.
+    # the soft-EM (forward-backward) unigram variant with its extra
+    # driver-side hard-EM train for the divergence grade
     "q_docs_unigram_soft_encode",
-    # late round-6 additions: the Gopher rule-based quality filter
-    # (map-only integer cross-multiplication over the scan) and
-    # SemDeDup/D4 prototypicality pruning (kmeans driver loop + one
-    # slim (id, cluster, dist) window)
+    # the Gopher rule-based quality filter (map-only integer
+    # cross-multiplication over the scan) and SemDeDup/D4
+    # prototypicality pruning (kmeans driver loop + one slim
+    # (id, cluster, dist) window)
     "q_docs_gopher_rules",
     "q_emb_prototype_prune",
     # the full Gopher Table-A1 repetition table (dup line/para +
@@ -202,37 +152,25 @@ HEADLINE = [
     # the C4 cleaning rules (line filters + page-drop triggers +
     # clean-text reconstruction) — map-only line/word folds
     "q_docs_c4_rules",
-    # round-7 additions: alignment-free duplicated-span dedup (one
-    # overlapping-shingle row per token position + banned-run merge +
-    # the aligned-block comparison twin), IVFPQ served from a
-    # persisted snapshot-table index (cold rep pays build_ann_index
-    # via the per-process cache; medians grade load + serve + the
-    # refit-identity branch), the derived-corpus C4 line-rule grade,
-    # and the Expand-free approx profile beside its exact twin
+    # alignment-free duplicated-span dedup (one overlapping-shingle row
+    # per token position + banned-run merge + the aligned-block
+    # comparison twin), the derived-corpus C4 line-rule grade, and the
+    # Expand-free approx profile beside its exact twin
     "q_docs_span_dedup",
     "q_docs_c4_rules_derived",
     "q_profile_orders_approx",
-    # late round-7 additions: incremental ingest dedup against the
-    # persisted MinHash signature index (cold rep pays the index
-    # build via the per-process cache; medians grade the batch
-    # signature pass + banded join + candidate-only verify), and the
-    # tokenizer-artifact round-trip encode
+    # incremental ingest dedup against the persisted MinHash signature
+    # index (the index is build_once, so only the cold rep pays its
+    # build; medians grade the batch signature pass + banded join +
+    # candidate-only verify), and the tokenizer-artifact round-trip
+    # encode
     "q_docs_incremental_dedup",
     "q_docs_bpe_persisted",
     # span-level decontamination: one shingle row per train token
     # position + eval-set semi join + run merge, total per-doc output
     "q_docs_decontaminate_spans",
-    # round-8 addition: the span-decontamination STRIP (the flag
-    # row's shape plus the per-doc text rebuild).  NB round 11: the
-    # codes-family rows (q_emb_ann_ivfpq_codes / _codes_extend /
-    # _codes_delete / _drift_report / _filtered / _ivfpq_persisted and
-    # the two PCA-moments rows) moved to the AUDIT section below —
-    # each is dominated by its graded twin/exact/lifecycle branches,
-    # not the serving path, and together they ate a third of the
-    # driver's 400 s budget (BENCH_r10 degraded to reps=2, min-of-one-
-    # warm-rep).  The serving-path perf representatives that REMAIN
-    # timed are q_emb_ann_lsh/ivf/pq/ivfpq/ivfpq_auto + the bench-
-    # scale ann_recall report.
+    # the span-decontamination STRIP (the flag row's shape plus the
+    # per-doc text rebuild)
     "q_docs_strip_contaminated_spans",
     # token-budget mixture selection: per-bucket sums (one map-side
     # combine, ≤ sources × 256 driver rows) + wholesale pre-cutoff
@@ -251,146 +189,41 @@ HEADLINE = [
     # distributed perceptron training: per epoch one map-only scoring
     # scan + one <=64-row gradient aggregate; epochs x 64 driver ints
     "q_docs_classifier_training",
-    # round-10 addition: metadata-filtered search, exact half (strong
-    # SQL oracle; the ANN half is in AUDIT — its cost is the cached
-    # meta-codes build + twin branches, not the pushdown serve).
+    # metadata-filtered search, exact half (strong SQL oracle; the ANN
+    # half is in AUDIT)
     "q_emb_knn_filtered",
 ]
 
-# Lifecycle-audit queries (round-11, the r10 verdict's item #3): each
-# is a correctness audit whose wall is dominated by its graded
-# twin/exact/lifecycle branches — serve + byte-identity twin + exact
-# ground-truth per query for the codes family, deliberately-uncached
-# index fits + moment scans for drift/PCA.  They stay REGISTERED and
-# gate-graded, and the bench still RUNS each once per invocation (so
-# an erroring audit is visible per-round), but their walls live in
-# BENCH_DETAILS.json's "audit" map and the compact line's
-# audit_total/audit_n — never in "value" — so the timing headline
-# gets ≥3 interleaved reps inside the driver's budget again.  Ordered
-# cheap-branch-first so a tight wall guard still covers most rows;
-# the three ~15–30 s deliberately-uncached lifecycle audits
-# (refit/residual/tuned) sit LAST and are expected to be wall-skipped
-# under the default guard (their bands live in BASELINE.md; raise
-# SPARK_GRAFT_BENCH_WALL_S to time them here).
+# Lifecycle audits: each row's wall is dominated by its graded
+# twin/exact/lifecycle branches (serve + byte-identity twin + exact
+# ground truth for the codes family, deliberately uncached index fits
+# and moment scans for drift/PCA/refit/tuned, a per-call re-fit for
+# ivfpq_auto), not by the serving path.  They stay registered and
+# gate-graded; the bench runs each once per invocation so an erroring
+# audit shows up.  PQ/IVFPQ serving quality is measured every run by
+# the ann_recall report.  Ordered cheapest first by their measured
+# walls (seconds, local[32], sf0.1); the rows without a bench timing
+# follow in their expected-cost order.
 AUDIT = [
-    "q_emb_pca_audit",
-    "q_emb_pca_incremental",
-    "q_emb_ann_drift_report",
-    "q_emb_ann_filtered",
+    "q_emb_pca_audit",  # 3.8
+    "q_emb_ann_ivfpq",  # 4.2
+    "q_emb_ann_ivfpq_auto",  # 4.6
+    "q_emb_ann_drift_report",  # 5.5
+    "q_emb_ann_ivfpq_codes",  # 7.6
+    "q_emb_pca_incremental",  # 11.1
+    "q_emb_ann_codes_extend",  # 13.8
+    "q_emb_ann_ivfpq_persisted",  # 20.0
+    "q_emb_ann_pq",  # 27.7
+    "q_emb_ann_tuned_persisted",  # 29.6
+    "q_emb_ann_filtered",  # 39.7
     "q_emb_ann_codes_delete",
-    "q_emb_ann_ivfpq_persisted",
-    "q_emb_ann_ivfpq_codes",
-    "q_emb_ann_codes_extend",
+    "q_emb_ann_refit_tombstone",
+    "q_emb_ann_opq",
+    "q_emb_ann_rotation_auto",
     "q_emb_ann_refit",
     "q_emb_ann_ivfpq_residual",
     "q_emb_ann_tuned",
-    # round-11 additions: the tombstone-arm lifecycle audit, the
-    # OPQ serve/twin/exact triple, and the all-auto deployment row
-    # (all deliberately-uncached per-call fits)
-    "q_emb_ann_refit_tombstone",
-    "q_emb_ann_opq",
-    "q_emb_ann_ivfpq_auto",
-    # round-12: demoted from HEADLINE (ground-truth-branch-dominated;
-    # see the HEADLINE note) — their serving QUALITY stays in every
-    # run's ann_recall report
-    "q_emb_ann_pq",
-    "q_emb_ann_ivfpq",
-    # round-12 new: persisted-tuning lifecycle (first call pays the
-    # per-process tune; the grade is artifact reads + two serves +
-    # an exact pass)
-    "q_emb_ann_tuned_persisted",
-    # round-13 new: rotation="auto" decision audit (first call pays
-    # three cached builds over both corpus classes + the explicit
-    # twin; the grade is artifact reads + byte-identity)
-    "q_emb_ann_rotation_auto",
 ]
-
-# Expected per-row walls (quiet-window local[32] sf0.1 measurements,
-# BASELINE.md round-11 definitive sweep + headline medians for the
-# two demoted rows).  Used ONLY for wall-guard admission — a row is
-# started only when elapsed + its expected cost fits inside the wall
-# (round-12 advisor item: the old start-gate admitted a 30 s audit
-# 1 s before the wall and ran 30 s past it).  Unknown rows default
-# to 30 s (conservative: they are admitted only with generous room).
-AUDIT_EXPECTED_S = {
-    # cheap tier (≤ 10): r12 definitive sweep measured these at or
-    # below their entries even in the late-session regime
-    "q_emb_pca_audit": 3.0,
-    "q_emb_pca_incremental": 6.0,
-    "q_emb_ann_pq": 6.5,
-    "q_emb_ann_ivfpq": 7.0,
-    "q_emb_ann_ivfpq_auto": 7.0,
-    "q_emb_ann_drift_report": 8.0,
-    # heavy tier: entries reflect the LATE-SESSION regime the driver
-    # actually runs audits in (after 3 reps + recall) — the r12
-    # definitive sweep measured the merge-heavy rows 1.3-1.9x above
-    # their fresh-session walls there (BASELINE.md round-12), and an
-    # underestimate converts directly into wall overshoot.  Each
-    # entry's comment records the measured (fresh, late-session)
-    # pair it was derived from (the r12 verdict's item #6: keep the
-    # two regimes on record instead of one widened scalar — the
-    # FRESH number is the operating figure; the entry here is the
-    # ADMISSION cost for the late regime)
-    # Round-13 re-measurement: the optimization round cut the
-    # construction/codegen overhead that dominated this tier, and the
-    # late-session regime FLIPPED — a warm JVM now runs these FASTER
-    # than a fresh one (bench-late walls below are from the committed
-    # BENCH_DETAILS.json audit map; fresh walls from quiet-window
-    # fresh-process runs this round).  Entries tightened to
-    # max(fresh, late) + headroom per the r12 verdict's item #6: both
-    # regimes on record, fresh = the operating figure, and the one
-    # RAISE (tuned) carries its fresh-session adjudication pair.
-    "q_emb_ann_ivfpq_persisted": 11.0,   # fresh ~9.9, late ≤ 11 (r12)
-    "q_emb_ann_filtered": 13.0,          # fresh ~10.9, late ≤ 13 (r12)
-    "q_emb_ann_ivfpq_codes": 13.0,       # fresh ~12.3, late 7.9 (r13)
-    "q_emb_ann_codes_delete": 18.0,      # fresh 16.9, late 8.0 (r13)
-    "q_emb_ann_codes_extend": 15.0,      # fresh 12.4, late 8.3 (r13)
-    "q_emb_ann_refit_tombstone": 20.0,   # fresh 18.4, late 8.4 (r13)
-    "q_emb_ann_ivfpq_residual": 28.0,    # fresh 27.0/27.6 (r13)
-    "q_emb_ann_refit": 28.0,             # fresh 30.3c/21.1w (r13); late 50.9 = stall signature, adjudicated by the paired fresh run
-    "q_emb_ann_opq": 25.0,               # fresh 14.9/11.1 (r13; was ~25 pre-opt)
-    "q_emb_ann_tuned": 35.0,             # fresh 29.2/34.9 (r13 adjudication pair; raised 32→35)
-    "q_emb_ann_tuned_persisted": 45.0,   # fresh 40.1 cold (103.6 stall adjudicated OUT by paired rerun), 9.9 warm (r13)
-    # r13 post-opt: 13.3 s first-in-process (was 46.5 pre-opt) /
-    # 1.8 s warm; the audit pass pays the per-process build cache once
-    "q_emb_ann_rotation_auto": 25.0,
-}
-
-
-def _audit_order(round_idx: int) -> list[str]:
-    """Audit rows in ADMISSION order for this round: a rotating
-    priority window first — three cheap rows (expected ≤ 10 s,
-    stride-3 rotation so successive rounds cover the cheap set) plus
-    ONE expensive row (round-robin over the > 15 s tier, so every
-    refit/tuned/opq-class row gets driver-side timing once per
-    cycle) — then the rest cheapest-first.  Round-robin by the
-    repo's BENCH_r*.json count (one file lands per driver round;
-    override with SPARK_GRAFT_BENCH_ROUND), so a default-budget
-    driver run times a DIFFERENT small subset each round instead of
-    structurally skipping the same tail forever (the round-11
-    verdict's top item: audit n=0, skipped=14).
-
-    Round-13 change (the r12 verdict's item #4): the rotating slot
-    draws from the EXPENSIVE tier (expected > 15 s) rather than
-    everything > 10 s — the 11-13 s rows were being admitted by the
-    cheapest-first tail anyway under the default wall (r12 timed
-    persisted/filtered/codes there), so a slot spent on them never
-    advanced the rotation into the 8 rows the default wall actually
-    skips (delete/extend/tombstone/refit/residual/tuned/opq/
-    tuned_persisted).  The slot's row LEADS the tail pass, giving it
-    first claim on the remaining wall headroom."""
-    by_cost = sorted(AUDIT, key=lambda n: AUDIT_EXPECTED_S.get(n, 30.0))
-    cheap = [n for n in by_cost if AUDIT_EXPECTED_S.get(n, 30.0) <= 10.0]
-    heavy = [n for n in by_cost if AUDIT_EXPECTED_S.get(n, 30.0) > 15.0]
-    pri = [cheap[(3 * round_idx + i) % len(cheap)] for i in range(3)]
-    if heavy:
-        pri.append(heavy[round_idx % len(heavy)])
-    order, seen = [], set()
-    for n in pri + by_cost:
-        if n not in seen:
-            seen.add(n)
-            order.append(n)
-    return order
 
 
 def headline_names(registry: dict) -> list[str]:
@@ -402,16 +235,26 @@ def headline_names(registry: dict) -> list[str]:
     return list(HEADLINE)
 
 
+def run_audits(run, elapsed, wall_s: float) -> list[str]:
+    """Call ``run(name)`` for each AUDIT row in order while
+    ``elapsed() < wall_s``; return the rows never started."""
+    for i, name in enumerate(AUDIT):
+        if elapsed() >= wall_s:
+            return AUDIT[i:]
+        run(name)
+    return []
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-    # Wall-clock budget: the harness running this may enforce its own
-    # timeout; a killed process emits NO json line at all, which is
-    # strictly worse than fewer repetitions.  Stop starting new rounds
-    # once the budget is spent (completed rounds still yield medians).
     budget_s = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_S", "400"))
+    wall_s = float(os.environ.get("SPARK_GRAFT_BENCH_WALL_S", "555"))
     t0 = time.perf_counter()
+
+    def elapsed() -> float:
+        return time.perf_counter() - t0
 
     from fortymhz_spark.queries import all_queries
     from fortymhz_spark.session import get_session
@@ -425,131 +268,46 @@ def main() -> None:
     # timings measure the engine, not classloading.
     registry[names[0]](spark, sf_dir).limit(1).collect()
 
-    # Wall + rotation state, needed BEFORE the rep loop since the
-    # round-12 priority-audit slice runs mid-sweep (below).
-    wall_s = float(os.environ.get("SPARK_GRAFT_BENCH_WALL_S", "555"))
-    recall_reserve_s = 20.0  # the measured ~18 s recall report + pad
-    try:
-        round_idx = int(os.environ["SPARK_GRAFT_BENCH_ROUND"])
-    except (KeyError, ValueError):
-        import glob as _glob
-
-        round_idx = len(
-            _glob.glob(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BENCH_r*.json",
-                )
-            )
-        )
-    audit_times: dict[str, float] = {}
-    audit_errors: dict[str, str] = {}
-    audit_skipped: list[str] = []
-
-    def run_audit(name: str) -> None:
+    def timed(name: str, tag: str, errs: dict[str, str]) -> float | None:
+        """Collect one query; its wall in seconds, or None after
+        recording the error in ``errs`` (one bad query must not void
+        the bench)."""
         start = time.perf_counter()
         try:
             rows = registry[name](spark, sf_dir).collect()
         except Exception as ex:
-            audit_errors[name] = f"{type(ex).__name__}: {str(ex)[:200]}"
-            print(
-                f"# audit {name}: ERROR {audit_errors[name]}",
-                file=sys.stderr,
-            )
-            return
+            errs[name] = f"{type(ex).__name__}: {str(ex)[:200]}"
+            print(f"# {tag} {name}: ERROR {errs[name]}", file=sys.stderr)
+            return None
         el = time.perf_counter() - start
-        audit_times[name] = el
-        print(
-            f"# audit {name}: {el:.3f}s ({len(rows)} rows)",
-            file=sys.stderr,
-        )
+        print(f"# {tag} {name}: {el:.3f}s ({len(rows)} rows)",
+              file=sys.stderr)
+        return el
 
     times: dict[str, list[float]] = {n: [] for n in names}
     errors: dict[str, str] = {}
     reps_run = 0
-    audit_credit = 0.0  # mid-sweep audit wall, credited to the budget
     last_rep_wall = 0.0
     for rep in range(reps):
-        if rep > 0 and time.perf_counter() - t0 > budget_s + audit_credit:
+        if rep > 0 and elapsed() + last_rep_wall > budget_s:
             print(
-                f"# budget {budget_s}s spent after {rep} round(s); "
-                "skipping remaining repetitions",
-                file=sys.stderr,
-            )
-            break
-        # Round-12 wall-aware THIRD rep (the r11 verdict's option B —
-        # a reserved audit slice ahead of rep 3): by this point the
-        # priority audits have already run, so the remaining wall must
-        # hold this rep (projected at the previous rep's wall) plus
-        # the recall report, or the rep yields.  On a healthy window
-        # everything fits (reps=3 + audits + recall ≈ 550 s); on a
-        # degraded one the sweep degrades to stat=min with the audit
-        # and recall evidence INTACT — the opposite trade from
-        # round 11, where a slow window silently zeroed the audits
-        # and the ungated recall could overshoot the wall.
-        if rep >= 2 and (
-            time.perf_counter() - t0 + last_rep_wall + recall_reserve_s
-            > wall_s
-        ):
-            print(
-                f"# rep {rep} skipped: projected past the {wall_s}s "
-                "wall after the audit slice; audits+recall take "
-                "priority on a degraded window (stat degrades to min)",
+                f"# budget {budget_s}s: round {rep + 1} would end past "
+                f"it; stopping after {rep} round(s)",
                 file=sys.stderr,
             )
             break
         reps_run = rep + 1
         rep_start = time.perf_counter()
         for name in names:
-            if name in errors:
-                continue
-            start = time.perf_counter()
-            try:
-                rows = registry[name](spark, sf_dir).collect()
-            except Exception as ex:  # one bad query must not void the bench
-                errors[name] = f"{type(ex).__name__}: {str(ex)[:200]}"
-                print(f"# {name}: ERROR {errors[name]}", file=sys.stderr)
-                continue
-            el = time.perf_counter() - start
-            times[name].append(el)
-            print(
-                f"# r{rep} {name}: {el:.3f}s ({len(rows)} rows)",
-                file=sys.stderr,
-            )
+            if name not in errors:
+                el = timed(name, f"r{rep}", errors)
+                if el is not None:
+                    times[name].append(el)
         last_rep_wall = time.perf_counter() - rep_start
-        if rep == 1:
-            # PRIORITY AUDIT SLICE (round-12, the r11 verdict's top
-            # item): the 3 cheap rotation rows run HERE, between the
-            # second and third reps — early enough that no window can
-            # exhaust the wall first, so a default-budget driver run
-            # always times ≥3 audit rows.  Cheap tier only (≤ 10 s
-            # expected each, ≤ ~25 s total — the heavy rotation row
-            # waits for the tail pass); the spent wall is credited to
-            # the rep budget so the slice never eats rep 3's budget
-            # gate, and each row still reserves the recall report.
-            a0 = time.perf_counter()
-            for name in _audit_order(round_idx)[:3]:
-                if name not in registry or name in audit_times:
-                    continue
-                if (
-                    time.perf_counter() - t0
-                    + AUDIT_EXPECTED_S.get(name, 30.0)
-                    > wall_s - recall_reserve_s
-                ):
-                    audit_skipped.append(name)
-                    continue
-                run_audit(name)
-            audit_credit = time.perf_counter() - a0
 
-    # An erroring query is excluded from the totals entirely — even if
-    # it produced samples in earlier rounds — so "value" never mixes a
-    # partial cold sample for a broken query into the round-over-round
-    # comparison; it is named in "excluded" so total comparisons can
-    # detect the changed denominator.
-    # Measured ANN recall@k AT BENCH SCALE (round-4 advisor item: the
-    # correctness gate only grades recall at sf0.001/0.01; a collapse
-    # at 10x corpus must be visible per-round).  Guarded: a recall
-    # failure must not void the timing bench.
+    # ANN recall@k at bench scale: the gate grades recall only at
+    # sf0.001/0.01, so a collapse at 10x corpus must show here.  A
+    # recall failure must not void the timing bench.
     ann_recall: dict[str, float] = {}
     ann_recall_detail: dict[str, dict[str, float]] = {}
     try:
@@ -572,68 +330,31 @@ def main() -> None:
         print(f"# ann_recall: ERROR {type(ex).__name__}: {str(ex)[:200]}",
               file=sys.stderr)
 
-    # Lifecycle-AUDIT passes (round-11; rotation + expected-cost
-    # admission + the mid-sweep priority slice round-12).  The 3
-    # cheap rotation rows already ran between reps 2 and 3 (the r11
-    # verdict's top item: positioned before ANY window can exhaust
-    # the wall, so a default-budget driver run always times ≥3 audit
-    # rows); a full single-block audit pass between reps was rejected
-    # for the r10 reason (two 23–26 s audits per round stalled
-    # unrelated probes in the shared session — the cheap slice is
-    # ≤ ~25 s).  Each row is admitted only when its EXPECTED wall
-    # (AUDIT_EXPECTED_S) still fits under SPARK_GRAFT_BENCH_WALL_S,
-    # so the process can no longer run a whole audit past the wall
-    # that was checked before it started.  A noisy window degrades
-    # to fewer TAIL audits and/or a min-stat 2-rep headline (the
-    # wall-aware rep-3 gate above), never to a killed process with
-    # no JSON line.  Audit walls live in BENCH_DETAILS.json and the
-    # compact line's audit summary, never in "value"; the FULL audit
-    # pass still needs the raised-wall invocation recorded in
-    # BASELINE.md, and the audit queries' CORRECTNESS is graded by
-    # the gate either way.
-    # Tail audit pass: everything the priority slice did not run, in
-    # rotation order (the heavy rotation row leads), under EXPECTED-
-    # COST admission (round-12 advisor item): a row is started only
-    # when its whole expected wall fits — the old elapsed-only gate
-    # admitted a 30 s audit 1 s under the wall and ran 30 s past the
-    # demonstrated-safe process budget.  Skipping is per-row, not a
-    # break: a cheap row later in the order can still fit after an
-    # expensive one did not.
-    for name in _audit_order(round_idx):
-        if name not in registry or name in audit_times:
-            continue
-        if (
-            time.perf_counter() - t0 + AUDIT_EXPECTED_S.get(name, 30.0)
-            > wall_s
-        ):
-            if name not in audit_skipped:
-                audit_skipped.append(name)
-            continue
-        run_audit(name)
-    # a priority-slice skip that fit later is not a skip
-    audit_skipped = [n for n in audit_skipped if n not in audit_times]
+    audit_times: dict[str, float] = {}
+    audit_errors: dict[str, str] = {}
+
+    def run_audit(name: str) -> None:
+        el = timed(name, "audit", audit_errors)
+        if el is not None:
+            audit_times[name] = el
+
+    audit_skipped = run_audits(run_audit, elapsed, wall_s)
     if audit_skipped:
         print(
-            f"# audit: insufficient wall headroom ({wall_s}s); skipped "
+            f"# audit: wall {wall_s}s reached; skipped "
             + ",".join(audit_skipped),
             file=sys.stderr,
         )
 
+    # An erroring query is excluded even if earlier rounds sampled it,
+    # so "value" never mixes in a partial sample of a broken query.
     ok = {n: ts for n, ts in times.items() if ts and n not in errors}
-    # With 3+ rounds the median discards the cold round naturally.
-    # With fewer (budget stopped the sweep early), median-of-2 would
-    # AVERAGE the cold round into every number — a phantom ~2×
-    # regression that says nothing about the code.  Fall back to min
-    # (the warm rep) so a short window degrades to fewer samples, not
-    # to systematically inflated ones.
+    # Median-of-2 would average the cold round into every number, so
+    # fewer than 3 rounds fall back to the min (the warm rep).
     medians = {
         n: (statistics.median(ts) if len(ts) >= 3 else min(ts))
         for n, ts in ok.items()
     }
-    # Which estimator produced "queries"/"value" (round-10 advisor
-    # item: a short-window min-of-warm-reps must not be read as a
-    # median) — uniform across queries because every ok query has
-    # exactly reps_run samples.
     stat = "median" if reps_run >= 3 else "min"
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     result = {
@@ -672,10 +393,10 @@ def main() -> None:
         json.dump(details, fh, indent=1)
     print(f"# cold/spread/samples -> {details_path}", file=sys.stderr)
     spark.stop()
-    # The driver captures only the stdout TAIL; the compact result line
-    # must be the last thing printed and must fit the capture window.
+    # The compact result line must be printed last and fit 1900 chars:
+    # shed precision, then the per-query map.
     line = json.dumps(result, separators=(",", ":"))
-    if len(line) > 1900:  # belt and braces: shed precision, then detail
+    if len(line) > 1900:
         result["queries"] = {n: round(m, 2) for n, m in medians.items()}
         line = json.dumps(result, separators=(",", ":"))
         if len(line) > 1900:

@@ -9,6 +9,7 @@ notebook's per-partition pandas materialization,
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
 
@@ -124,27 +125,34 @@ def run_to_memory(
     reference's "call ``read_batch()`` once and look at the result"
     pattern (``test_reader.ipynb`` cell-2), with bookkeeping handled by
     the checkpoint.  Test/debug utility — the memory sink collects to
-    the driver.
+    the driver.  A checkpoint made here is removed once the query has
+    stopped; the table's rows live on the driver, not in it.
     """
     name = name or f"mem_{uuid.uuid4().hex[:12]}"
-    checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="fmhz_ckpt_")
-    query = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination(timeout_seconds)
-    if query.isActive:
-        # A silent partial table here turns into flaky downstream
-        # assertions that look like operator bugs — fail loudly.
-        query.stop()
-        raise TimeoutError(
-            f"stream {name!r} did not finish within {timeout_seconds}s; "
-            "stopped with only partially-committed batches"
+    own_checkpoint = checkpoint_dir is None
+    if own_checkpoint:
+        checkpoint_dir = tempfile.mkdtemp(prefix="fmhz_ckpt_")
+    try:
+        query = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
         )
+        query.awaitTermination(timeout_seconds)
+        if query.isActive:
+            # A silent partial table here turns into flaky downstream
+            # assertions that look like operator bugs — fail loudly.
+            query.stop()
+            raise TimeoutError(
+                f"stream {name!r} did not finish within {timeout_seconds}s; "
+                "stopped with only partially-committed batches"
+            )
+    finally:
+        if own_checkpoint:
+            shutil.rmtree(checkpoint_dir, ignore_errors=True)
     return spark.table(name)
 
 

@@ -40,7 +40,8 @@ def test_batch_read_parallelism(spark):
     assert df.count() == len(_expected_rows(64))
 
 
-def test_stream_single_batch_equals_batch(spark):
+def test_stream_single_batch_equals_batch(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     s = (
         spark.readStream.format("dthits")
         .option("orbitsPerBatch", 100)
@@ -50,9 +51,11 @@ def test_stream_single_batch_equals_batch(spark):
     out = run_to_memory(s, spark, timeout_seconds=90)
     got = sorted(tuple(r) for r in out.collect())
     assert got == sorted(_expected_rows(100))
+    # the checkpoint run_to_memory made for itself is gone
+    assert not list(tmp_path.glob("fmhz_ckpt_*"))
 
 
-def test_stream_advances_over_micro_batches(spark):
+def test_stream_advances_over_micro_batches(spark, tmp_path):
     name = "dthits_multi"
     s = (
         spark.readStream.format("dthits")
@@ -64,7 +67,7 @@ def test_stream_advances_over_micro_batches(spark):
         s.writeStream.format("memory")
         .queryName(name)
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="dthits_ckpt_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="300 milliseconds")
         .start()
     )

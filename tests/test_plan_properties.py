@@ -10,7 +10,9 @@ quadratic (CartesianProduct) sneaks into the LSH pipelines.
 
 from __future__ import annotations
 
+import os
 import re
+from urllib.parse import unquote, urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -443,8 +445,14 @@ def test_incremental_dedup_never_rescans_archive_signatures(
     new = docs.filter(F.col("doc_id") % 20 == 0)
     td = str(tmp_path / "idx")
     dd.build_minhash_index(old, td, num_hashes=32, bands=16)
-    plan = plan_of(dd.incremental_near_dups(new, old, td, threshold=0.7))
-    assert td in plan  # lanes come from the artifact
+    out = dd.incremental_near_dups(new, old, td, threshold=0.7)
+    plan = plan_of(out)
+    # lanes come from the artifact (inputFiles, not the plan text:
+    # Spark abbreviates a long scan Location to ".../")
+    assert any(
+        unquote(urlparse(f).path).startswith(td + os.sep)
+        for f in out.inputFiles()
+    )
     # the candidate join BROADCASTS the batch's banded lanes: the
     # standing lanes are scanned map-only, never hash-shuffled on the
     # bucket key and never self-joined corpus-vs-corpus (round-8: the

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import time
 
 import pytest
@@ -180,7 +179,7 @@ def test_assemble_orbits_stateful(spark, tmp_path):
 
     stream = file_stream(spark, str(src / "*"), DT_HIT, max_files_per_trigger=1)
     name = "orbits_out"
-    ckpt = tempfile.mkdtemp(prefix="fmhz_orbit_ckpt_")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         assemble_orbits(stream, inactivity_ms=10_000)
         .writeStream.format("memory")
@@ -275,7 +274,7 @@ def test_assemble_orbits_rocksdb_state_store(spark, tmp_path):
             .writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="rdb_ckpt_"))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(processingTime="500 milliseconds")
             .start()
         )
@@ -368,7 +367,7 @@ def test_profile_orbits_transform_with_state(spark, tmp_path):
     )
     stream = file_stream(spark, str(src / "*"), DT_HIT, max_files_per_trigger=1)
     name = "orbit_profiles"
-    ckpt = tempfile.mkdtemp(prefix="fmhz_tws_ckpt_")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         profile_orbits(stream, inactivity_ms=10_000)
         .writeStream.format("memory")
@@ -641,7 +640,7 @@ def test_orbit_state_ttl_flush_then_late_hit_starts_fresh_state(spark, tmp_path)
 
     stream = file_stream(spark, str(src / "*"), DT_HIT)
     name = "ttl_orbits_out"
-    ckpt = tempfile.mkdtemp(prefix="fmhz_ttl_ckpt_")
+    ckpt = str(tmp_path / "ckpt")
     q = (
         assemble_orbits(stream, inactivity_ms=1_500)
         .writeStream.format("memory")

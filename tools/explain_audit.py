@@ -65,10 +65,10 @@ def main() -> None:
     from fortymhz_spark.queries import all_queries
     from fortymhz_spark.session import get_session
 
-    # extras beyond HEADLINE: the bench AUDIT rows (the round-11
-    # headline/audit split moved the codes/PCA lifecycle queries
-    # there — their plan shape still wants auditing) plus the named
-    # stragglers, skipping anything HEADLINE already covers
+    # extras beyond HEADLINE: the bench AUDIT rows (their plan shape
+    # wants auditing even though their walls stay out of the
+    # headline) plus the named stragglers, skipping anything HEADLINE
+    # already covers
     extra = [
         q
         for q in (*AUDIT, "q_docs_simhash_near_dups", "q_emb_ann_lsh")
